@@ -13,8 +13,9 @@ import graft.sources.BucketedPages
   * Two crawl measurements:
   *   - `crawl_end_to_end`: the full wave loop (snapshots, bloom, retries)
   *     over a bucketed pages table — the honest sandbox-scale number;
-  *     4 Spark jobs/wave (see CrawlLoop scaladoc), so driver overhead
-  *     amortizes at real wave sizes.
+  *     a fixed number of Spark jobs per wave (12 in the traced
+  *     `crawl_deep` benchmark; see CrawlLoop scaladoc), so driver
+  *     overhead amortizes at real wave sizes.
   *   - `wave_urls_per_sec @ local[2/8/32]`: the wave INNER pipeline
   *     (politeness schedule → bucketed fetch join → parse+extract →
   *     aggregate) over a large generated pages table, at three
@@ -394,7 +395,7 @@ object Bench {
       results("crawl_end_to_end_urls_per_sec") = crawlUrls / crawlSec
 
       // the same loop at 4× the items per page: wave count stays the
-      // same (depth-bound), the per-wave FIXED cost (4 jobs) stays the
+      // same (depth-bound), the per-wave FIXED cost (its jobs) stays the
       // same, so throughput should rise with wave size — the direct
       // evidence for the "overhead amortizes into the data plane" claim
       val webCfg4x = webCfg.copy(itemsPerPage = webCfg.itemsPerPage * 4)
@@ -411,7 +412,7 @@ object Bench {
       results("crawl_end_to_end_4x_urls_per_sec") = crawlUrls4x / crawlSec4x
       // the every-run-stable crawl signal (the absolute 1× leg breathes
       // ±30% with co-tenant noise): throughput gain from 4× the wave size
-      // at the SAME wave count — direct evidence the fixed 4-jobs/wave
+      // at the SAME wave count — direct evidence the fixed per-wave
       // cost amortizes into the data plane (≥ 2.3 across all recorded
       // runs; 4.0 would be perfect amortization with zero marginal cost)
       results("crawl_amortization_ratio") =

@@ -8,6 +8,7 @@ import graft.frontier.{FrontierEntry, PoliteScheduler, Scheduled}
 import graft.seen.UrlSeen
 import graft.store.SnapshotStore
 import graft.url.UrlCanon
+import scala.collection.mutable.ArrayBuffer
 
 /** The generic crawl wave loop (SURVEY.md R5/§7.6):
   *
@@ -24,18 +25,29 @@ import graft.url.UrlCanon
   *     simultaneously the resumability contract (north_rule) AND the
   *     lineage truncation that keeps plan depth constant across hundreds
   *     of waves (no ever-growing DAG, no driver OOM);
-  *   - EXACTLY FOUR Spark jobs per wave — the four snapshot writes
-  *     (fetch_log, records, frontier, seen delta). All count metrics
-  *     (scheduled / records / new_links and the loop's own frontier-count
-  *     termination check) come from the written Parquet FOOTERS
-  *     (driver-side metadata, no job — [[SnapshotStore.rowCount]]);
-  *     fetched_ok / retries ride the fetch_log write as accumulators. The
-  *     r1 loop spent ~10 jobs/wave, half of them metric `count()`s;
+  *   - a fixed number of Spark jobs per wave, whatever the crawl's
+  *     history: the traced `crawl_deep` benchmark (seed 111, `python3
+  *     perfbench/run.py --workload crawl_deep --seed 111 --seconds 10
+  *     --trace 1`) runs 168 jobs over 13 waves, `crawl.jobs_per_wave`
+  *     12.9: 12 in each wave after a leg's first, plus the set-up and
+  *     first-wave jobs of its two legs. Four are the snapshot writes
+  *     (fetch_log, records, frontier, seen delta); the rest are the
+  *     shuffle and broadcast stages AQE runs as jobs of their own for
+  *     those writes. CrawlLoopSpec pins
+  *     that the count does not grow. Store reads run no job (known
+  *     schema and file list, [[SnapshotStore.read]]); all count metrics
+  *     (scheduled / records / new_links, the loop's own frontier-count
+  *     termination check, and both sizes on resume) come from the
+  *     written Parquet FOOTERS (driver-side metadata, no job —
+  *     [[SnapshotStore.rowCount]]); fetched_ok / retries ride the
+  *     fetch_log write as accumulators;
   *   - the SEEN table is append-only deltas (`seen_w*`), never a rewrite
   *     of the full set: at 10^10 URLs rewriting seen every wave is
-  *     O(crawl²) I/O. Readers union the deltas, which are distinct by
-  *     construction (every delta row passed that wave's unseen filter), so
-  *     the anti-join runs with NO defensive distinct() shuffle;
+  *     O(crawl²) I/O. The loop keeps the delta paths in memory and reads
+  *     them as ONE scan, so small files pack into a few splits whatever
+  *     the wave count. The deltas are distinct by construction (every
+  *     delta row passed that wave's unseen filter), so the anti-join runs
+  *     with NO defensive distinct() shuffle;
   *   - `cfg.pagesTable` points the fetch join at a
   *     [[graft.sources.BucketedPages]] table bucketed+sorted by
   *     `url_hash`: the pages side is read pre-partitioned (NO Exchange, NO
@@ -180,16 +192,23 @@ object CrawlLoop extends Serializable {
         .cache()
     }
 
-    // resume (north_rule): pick up from the last committed snapshot
-    val (startWave, frontier0) = store.head match {
+    // resume (north_rule): pick up from the last committed snapshot. The
+    // chain is walked once; each commit below appends its delta paths.
+    val chain = store.snapshots.map(store.readManifest)
+    val (startWave, frontier0) = chain.lastOption match {
       case Some(snap) =>
         (snap.wave + 1, store.table(snap, "frontier").get.as[FrontierEntry])
       case None =>
         (0, admit(seeds.map(s => entryOf(s.url, s.site, s.seed_id, 0, 0, 0))))
     }
+    val deltaPaths = DeltaPrefixes.map(prefix => prefix ->
+      ArrayBuffer.from(chain.flatMap(_.tables.collect {
+        case (name, path) if name.startsWith(prefix) => path }))).toMap
 
-    def seenUnion(): DataFrame = readDeltas(spark, store, "seen_w",
-      spark.range(0).select(col("id").as("url_hash")))
+    // one scan over every seen delta, so its split count does not grow
+    // with the wave count
+    def seenUnion(): DataFrame = store.read(deltaPaths("seen_w").toSeq)
+      .getOrElse(spark.range(0).select(col("id").as("url_hash")))
 
     var frontier = frontier0
     var seen: DataFrame =
@@ -213,21 +232,19 @@ object CrawlLoop extends Serializable {
     def addToSeg(h: Long): Unit = UrlSeen.addToSegMap(segMap, h, cfg.seenCfg)
     def orMergeSegs(m: Map[Int, Array[Long]]): Unit =
       UrlSeen.orMergeInto(segMap, m)
+    // a resume takes the seen size (and below, the frontier size) from
+    // the footers
     var seenCount =
-      if (!driverBloom) seen.count()
-      else if (cfg.bloomImpl == "incremental") {
-        val init = seen.select(col("url_hash")).as[Long].collect()
-        init.foreach(addToSeg)
-        init.length.toLong
-      } else {
-        val n = seen.count()
-        if (cfg.bloomImpl == "auto" && n < cfg.bloomDeltaThreshold)
-          seen.select(col("url_hash")).as[Long].collect().foreach(addToSeg)
-        else if (n > 0)
-          orMergeSegs(UrlSeen.collectSegments(
-            UrlSeen.buildSegments(seen, cfg.seenCfg)))
-        n
-      }
+      if (chain.nonEmpty) deltaPaths("seen_w").iterator.map(store.rowCount).sum
+      else seen.count()
+    if (driverBloom) {
+      if (cfg.bloomImpl == "incremental" ||
+          cfg.bloomImpl == "auto" && seenCount < cfg.bloomDeltaThreshold)
+        seen.select(col("url_hash")).as[Long].collect().foreach(addToSeg)
+      else if (seenCount > 0)
+        orMergeSegs(UrlSeen.collectSegments(
+          UrlSeen.buildSegments(seen, cfg.seenCfg)))
+    }
     // per-wave accumulator choice; "auto" may FLIP incremental→delta as the
     // crawl grows — both feed the same segMap, so the flip is seamless
     def waveBloomMode(): String =
@@ -235,10 +252,16 @@ object CrawlLoop extends Serializable {
       else if (cfg.bloomImpl == "auto")
         (if (seenCount < cfg.bloomDeltaThreshold) "incremental" else "delta")
       else cfg.bloomImpl
-    var frontierCount = frontier.count()
+    var frontierCount =
+      if (chain.nonEmpty) store.tableRowCount(chain.last, "frontier")
+      else frontier.count()
 
+    // each wave's jobs carry its number as their description
+    val sc = spark.sparkContext
+    val outerDescription = sc.getLocalProperty("spark.job.description")
     var wave = startWave
-    while (frontierCount > 0 && wave < cfg.maxWaves) {
+    try while (frontierCount > 0 && wave < cfg.maxWaves) {
+      sc.setJobDescription(s"crawl wave $wave")
       val waveStart = wave.toLong * 1000000L
       // schedulerImpl × robotsImpl dispatch: the scheduler choice (typed
       // Aggregator top-k vs window twin) is orthogonal to where robots
@@ -410,6 +433,8 @@ object CrawlLoop extends Serializable {
 
       // reload state from the committed snapshot: truncates lineage so
       // wave N+1's plan is independent of wave N's
+      deltaPaths.foreach { case (prefix, paths) =>
+        paths += snap.tables(s"$prefix$wave") }
       frontier = store.table(snap, "frontier").get.as[FrontierEntry]
       seen = seenUnion()
       frontierCount = store.tableRowCount(snap, "frontier")
@@ -418,29 +443,23 @@ object CrawlLoop extends Serializable {
       parsed.unpersist()
       newEntries.unpersist()
       wave += 1
-    }
+    } finally sc.setJobDescription(outerDescription)
 
     if (cfg.pagesTable.isEmpty) pagesKeyed.unpersist()
-    // typed empty fallbacks: a crawl where no wave ever committed (all
+    // records and fetch_log keep wave order (a union, one scan per wave):
+    // callers that stable-sort by crawl_rank inherit it for tied ranks.
+    // Typed empty fallbacks: a crawl where no wave ever committed (all
     // seeds robots-disallowed, maxWaves = 0) must still return frames
     // with the documented schemas, not a column-less emptyDataFrame
     Result(
-      readDeltas(spark, store, "records_w",
-        spark.emptyDataset[PageParsers.CrawlRecord].toDF()),
-      readDeltas(spark, store, "fetch_log_w",
-        spark.emptyDataset[FetchLogRow].toDF()),
+      store.readInOrder(deltaPaths("records_w").toSeq)
+        .getOrElse(spark.emptyDataset[PageParsers.CrawlRecord].toDF()),
+      store.readInOrder(deltaPaths("fetch_log_w").toSeq)
+        .getOrElse(spark.emptyDataset[FetchLogRow].toDF()),
       seenUnion(),
       wave)
   }
 
-  /** Union all per-wave delta tables recorded across snapshots. */
-  private def readDeltas(spark: SparkSession, store: SnapshotStore,
-      prefix: String, empty: => DataFrame): DataFrame = {
-    val paths = store.snapshots.flatMap { id =>
-      val snap = store.readManifest(id)
-      snap.tables.collect { case (name, path) if name.startsWith(prefix) => path }
-    }.distinct
-    paths.map(spark.read.parquet(_)).reduceOption(_ unionByName _)
-      .getOrElse(empty)
-  }
+  // the per-wave delta tables each commit appends
+  private val DeltaPrefixes = Seq("seen_w", "records_w", "fetch_log_w")
 }

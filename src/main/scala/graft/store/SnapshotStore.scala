@@ -1,6 +1,17 @@
 package graft.store
 
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
+  PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftshim.SchemaBridge
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Iceberg-style snapshot store: immutable Parquet data files under an
@@ -19,16 +30,26 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * A crash between any two steps leaves HEAD at the parent snapshot —
   * every frontier iteration is resumable from the last committed snapshot
   * (north_rule). Orphaned data dirs from uncommitted snapshots are ignored
-  * by readers and cleaned opportunistically.
+  * by readers and stay on disk: no code removes them (the next commit of
+  * the same id overwrites its own table dirs).
+  *
+  * Reads launch no Spark job. A committed data dir is immutable, so the
+  * store lists it and reads its Parquet footers once, on the driver, and
+  * keeps the result: the file list, the total row count and the Spark row
+  * schema the writer put in the first footer. A scan is built over that
+  * file list with that schema, so Spark neither lists nor infers.
   *
   * At cluster scale the same layout lands on an object store: Parquet data
   * files are written by executors (distributed), only the tiny manifest
   * JSON passes through the driver.
   */
 final class SnapshotStore(val root: String, spark: SparkSession) {
+  import SnapshotStore.{DataFiles, SparkSchemaKey}
 
   private val rootPath = Paths.get(root)
   Files.createDirectories(rootPath)
+  // data dir path -> its files, schema and rows (see dataFiles)
+  private val listed = scala.collection.concurrent.TrieMap[String, DataFiles]()
 
   final case class Snapshot(id: Long, parent: Long, wave: Int,
       tables: Map[String, String], metrics: Map[String, Long])
@@ -88,6 +109,7 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
     val dataDir = rootPath.resolve(f"data-$id%06d")
     val written = tables.map { case (name, df) =>
       val p = dataDir.resolve(name).toString
+      listed.remove(p) // a retried commit rewrites its own dirs
       df.write.mode("overwrite").parquet(p)
       name -> p
     }.toMap
@@ -110,8 +132,27 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
 
   /** Read a table out of a snapshot. */
   def table(snap: Snapshot, name: String): Option[DataFrame] =
-    snap.tables.get(name).filter(p => Files.exists(Paths.get(p)))
-      .map(spark.read.parquet(_))
+    snap.tables.get(name).flatMap(p => read(Seq(p)))
+
+  /** One scan over the tables at `paths`, which share one schema (the
+    * per-wave deltas of one table): small files pack into a few splits,
+    * and rows come in no particular order. None if no path holds a file.
+    */
+  def read(paths: Seq[String]): Option[DataFrame] = {
+    val dirs = paths.map(dataFiles)
+    dirs.iterator.flatMap(_.schema).nextOption().map { schema =>
+      val index = new KnownFiles(paths, dirs.flatMap(_.files))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index,
+        index.partitionSchema, SchemaBridge.asNullable(schema), None,
+        new ParquetFileFormat, Map.empty)(spark))
+    }
+  }
+
+  /** The tables at `paths` as a union in path order, one scan per path:
+    * rows of an earlier path come before rows of a later one.
+    */
+  def readInOrder(paths: Seq[String]): Option[DataFrame] =
+    paths.flatMap(p => read(Seq(p))).reduceOption(_ unionByName _)
 
   /** Row count of a written table from Parquet FOOTERS only — a pure
     * driver-side metadata read, NO Spark job. This is how the crawl loop
@@ -120,25 +161,41 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
     * four snapshot writes instead of adding count() jobs (the r1 loop
     * spent ~10 jobs/wave, half of them metric counts).
     */
-  def rowCount(path: String): Long = {
+  def rowCount(path: String): Long = dataFiles(path).rows
+
+  /** A data dir's Parquet files, the Spark row schema in the first footer
+    * that carries one, and the rows in all footers. Kept per existing dir:
+    * committed dirs never change, and a commit drops what it rewrites.
+    */
+  private def dataFiles(path: String): DataFiles = listed.getOrElse(path, {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return 0L
-    val it = fs.listStatus(dir).iterator
-    var total = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try total += r.getRecordCount
-        finally r.close()
+    if (!fs.exists(dir)) DataFiles(Seq.empty, None, 0L)
+    else {
+      val files = fs.listStatus(dir).toSeq
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      // options from the loaded session conf: without them each open
+      // builds a fresh Hadoop Configuration and re-parses its XML defaults
+      val options = HadoopReadOptions.builder(conf).build()
+      var schema = Option.empty[StructType]
+      var rows = 0L
+      files.foreach { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+          options)
+        try {
+          rows += r.getRecordCount
+          if (schema.isEmpty)
+            schema = Option(r.getFileMetaData.getKeyValueMetaData
+              .get(SparkSchemaKey))
+              .map(DataType.fromJson(_).asInstanceOf[StructType])
+        } finally r.close()
       }
+      val found = DataFiles(files, schema, rows)
+      listed(path) = found
+      found
     }
-    total
-  }
+  })
 
   def tableRowCount(snap: Snapshot, name: String): Long =
     snap.tables.get(name).map(rowCount).getOrElse(0L)
@@ -161,4 +218,26 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
       }
       b.result().reverse
   }
+}
+
+object SnapshotStore {
+  // footer key under which Spark's Parquet writer stores the row schema
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private final case class DataFiles(files: Seq[FileStatus],
+      schema: Option[StructType], rows: Long)
+}
+
+/** A fixed file list: a scan over it never lists a directory. */
+private final class KnownFiles(roots: Seq[String], files: Seq[FileStatus])
+    extends FileIndex {
+  override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
+    roots.map(new org.apache.hadoop.fs.Path(_))
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+  override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_.getLen).sum
+  override def partitionSchema: StructType = new StructType()
 }

@@ -324,4 +324,34 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(a == b)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
+
+  test("jobs per wave: every wave after the first launches the same " +
+    "number of Spark jobs, and reading the store launches none") {
+    val dir = java.nio.file.Files.createTempDirectory("crawl-jobs")
+    val store = new SnapshotStore(dir.toString, spark)
+    val log = new graft.JobLog(spark.sparkContext)
+    val res = try CrawlLoop.run(spark, pagesDf, seedsDs, robotsDs, store,
+      crawlCfg) finally log.close()
+    val jobs = log.descriptions
+    val perWave = (0 until res.waves)
+      .map(w => jobs.count(_.contains(s"crawl wave $w")))
+    assert(res.waves >= 5, s"fixture crawl too short: ${res.waves} waves")
+    assert(perWave.forall(_ > 0), s"untagged wave jobs: $perWave")
+    // a reload whose cost grows with the stored deltas (one schema
+    // inference job per delta, say) shows up here as a rising count
+    assert(perWave.tail.distinct.size == 1,
+      s"jobs per wave depend on crawl history: $perWave")
+    // building the Result frames after the last wave launches nothing
+    assert(jobs.last.contains(s"crawl wave ${res.waves - 1}"))
+
+    val snaps = store.snapshots.map(store.readManifest)
+    def deltas(prefix: String) = snaps.map(s => s.tables(s"$prefix${s.wave}"))
+    val reads = new graft.JobLog(spark.sparkContext)
+    try {
+      store.table(snaps.last, "frontier").get
+      store.read(deltas("seen_w")).get
+      store.readInOrder(deltas("records_w")).get
+    } finally reads.close()
+    assert(reads.count == 0, s"store reads launched ${reads.count} jobs")
+  }
 }

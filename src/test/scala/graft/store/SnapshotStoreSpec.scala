@@ -3,6 +3,7 @@ package graft.store
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import java.nio.file.{Files, Paths}
 
 /** Commit-protocol guarantees: atomic manifest, HEAD only moves on full
@@ -62,5 +63,30 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val store2 = new SnapshotStore(root, spark)
     assert(store2.snapshots == Seq(0L))
     assert(store2.head.get.id == 0)
+  }
+
+  test("delta reads over several waves, one of them empty: no Spark job, " +
+    "the written schema, every row, and path order for the ordered form") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("store-deltas").toString
+    val store = new SnapshotStore(root, spark)
+    val waves = Seq(Seq(1L, 2L), Seq.empty[Long], Seq(3L), Seq(4L, 5L, 6L))
+    val paths = waves.zipWithIndex.map { case (xs, w) =>
+      store.commit(w, Map(s"d_w$w" -> xs.toDF("h").coalesce(1)), Map.empty)
+        .tables(s"d_w$w")
+    }
+    assert(paths.map(store.rowCount) == waves.map(_.size.toLong))
+    val log = new graft.JobLog(spark.sparkContext)
+    val (scan, ordered, t1) = try {
+      (store.read(paths).get, store.readInOrder(paths).get,
+        store.table(store.readManifest(1), "d_w1").get)
+    } finally log.close()
+    assert(log.count == 0, "a store read must not launch a Spark job")
+    val schema = StructType(Seq(StructField("h", LongType)))
+    Seq(scan, ordered, t1).foreach(df => assert(df.schema == schema))
+    assert(scan.as[Long].collect().sorted.toSeq == waves.flatten)
+    assert(ordered.as[Long].collect().toSeq == waves.flatten)
+    assert(t1.count() == 0)
+    assert(store.read(Seq(Paths.get(root, "absent").toString)).isEmpty)
   }
 }
